@@ -54,10 +54,6 @@ def cell_height(level: int) -> float:
     return LAT_SPAN / (1 << level)
 
 
-def min_cell_dim(level: int) -> float:
-    return min(cell_width(level), cell_height(level))
-
-
 def level_for_extent(extent_deg: float, max_cells_per_side: int = 4) -> int:
     """Pick the coarsest level at which a geometry of the given extent
     covers at most ``max_cells_per_side`` cells per axis.
@@ -191,6 +187,11 @@ def np_cell_id(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
         + np_grid_x(lon, level) * np.int64(_X_MULT)
         + np_grid_y(lat, level)
     )
+
+
+def np_cell_xy(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Grid indices (x, y) of packed cell ids — mirror of cell_x/cell_y."""
+    return (cell % _L_MULT) // _X_MULT, cell % _X_MULT
 
 
 # ---------------------------------------------------------------------------

@@ -10,28 +10,44 @@ Our algorithm (north_rule: "iterative k-ring expansion + per-partition
 bounded heap"):
 
 1. index objects by grid cell at ``level``;
-2. each unresolved query explodes to the Chebyshev disk of radius ``ring``
-   around its cell; equi-join on cell; rank candidates per query by
+2. size each query's first disk from exact object counts per cell two
+   levels finer than ``level`` (one aggregate, which also materializes the
+   object cache). For every such cell ``h`` of the occupied bbox the
+   driver finds the smallest radius ``B`` such that the cells lying
+   wholly within ``B`` of every point of ``h`` hold ≥ k objects; a query
+   in ``h`` then has ≥ k objects within ``B``, and its disk spans
+   ``ceil(B/cell_w)`` cells in x and ``ceil(B/cell_h)`` in y. The radius
+   table is broadcast to the queries;
+3. each unresolved query explodes to its disk of ``_ring`` × ``_ring_y``
+   cells around its cell; equi-join on cell; rank candidates per query by
    (dist², object id) with a window — Spark's window TopK is the
    "bounded heap" (partial aggregation keeps state ≤ k per query);
-3. a query is *resolved* when it has ≥ k candidates and its kth distance is
-   ≤ the guaranteed-complete bound: any object outside disk(ring) is at
-   least ``ring`` full cell-widths away on some axis, so kth_dist ≤
-   ring·min(cell_w, cell_h) proves no closer object exists outside the
-   disk. (Same invariant as the reference's γᵢ = 2uᵢ + |crᵢ,sₖ| bound —
-   ours is the grid form.)
-4. unresolved queries double ``ring`` and repeat. Termination: the disk
-   eventually covers the whole grid.
+4. a query is *resolved* when it has ≥ k candidates and its kth distance is
+   ≤ the guaranteed-complete bound: any object outside the disk is more
+   than ``_ring`` full cell-widths away in x or ``_ring_y`` cell-heights in
+   y, so kth_dist ≤ min(ring·cell_w, ring_y·cell_h) proves no closer
+   object exists outside the disk. (Same invariant as the reference's
+   γᵢ = 2uᵢ + |crᵢ,sₖ| bound — ours is the grid form.) Step 2's disk
+   passes this test in round 1 whenever queries and objects lie inside
+   the grid's lon/lat extent (edge cells clamp points beyond it);
+5. unresolved queries grow each ring to the width their kth distance
+   needs (4× when they have < k candidates) and repeat. Termination: the
+   disk eventually covers the whole grid.
 
-The loop is driver-side control flow over DataFrame ops (a count per round)
-— no data ever collects to the driver, so it holds at 10^12 rows; rounds are
-O(log grid) worst case and 1-2 in practice when ``level`` fits the density.
+The loop is driver-side control flow over DataFrame ops (a count per
+round). Only the counts reach the driver — one row per occupied count
+cell — and the broadcast table is capped at ``_TABLE_CELLS`` cells.
+Euclid queries inside the extent resolve in round 1; geodesic first
+rings are sized from the global density, and rounds are O(log grid)
+worst case.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,6 +62,16 @@ from sedona_spark.functions.st_measures import (
 )
 
 _RAD = math.pi / 180.0
+# First-ring object counts are taken this many levels finer than the join:
+# a cell's certified radius is at least its own diagonal, so quarter-cells
+# keep it from inflating the disk where join cells hold many objects.
+_COUNT_LEVELS = 2
+# Largest first-ring radius table (cells) the driver builds and broadcasts;
+# a wider occupied bbox is tabulated at the finest coarser level that fits.
+_TABLE_CELLS = 1 << 16
+# The per-cell radius sweep spans this many cells of the wider axis; a
+# cell that needs more takes its parent cell's radius.
+_SWEEP_CELLS = 8
 
 
 def knn_query(
@@ -78,16 +104,15 @@ def _disk_join(
     oy: str,
     metric: str = "euclid",
 ) -> DataFrame:
-    """Join each query to all objects within its per-query cell disk
-    (``_ring`` column — data-adaptively sized per round; geodesic queries
-    may carry a separate ``_ring_y`` for an asymmetric disk: full
-    longitude coverage needs only the LATITUDE band the y-bound
-    certifies, not a square blow-up)."""
+    """Join each query to all objects within its per-query cell disk:
+    ``_ring`` cells either side in x and ``_ring_y`` in y (cells are not
+    square, and a geodesic disk's full longitude coverage needs only the
+    LATITUDE band the y-bound certifies)."""
     n = 1 << level
     home = cells.cell_id(F.col(qx), F.col(qy), level)
     cx, cy = cells.cell_x(home), cells.cell_y(home)
     rng = F.col("_ring")
-    rng_y = F.col("_ring_y") if "_ring_y" in queries.columns else rng
+    rng_y = F.col("_ring_y")
     if metric in ("sphere", "spheroid"):
         # longitude is CYCLIC on the sphere: wrap the x-range via pmod so a
         # query at lon 179.9 probes cells across the antimeridian instead
@@ -156,9 +181,6 @@ def knn_join_broadcast(
     gates broadcast on ``autoBroadcastJoinThreshold``
     (``JoinQueryDetector.scala:191-202``): an oversize query side raises
     instead of OOMing the driver."""
-    import numpy as np
-    import pandas as pd
-
     qrows = queries.select(query_id, qx, qy).limit(max_query_rows + 1).collect()
     if len(qrows) > max_query_rows:
         raise ValueError(
@@ -243,9 +265,6 @@ def knn_join_obj_broadcast(
     object order — identical output contract to ``knn_join``
     (row_number semantics). Zero shuffle; the query side streams through.
     """
-    import numpy as np
-    import pandas as pd
-
     obj_cols = objects.columns
     order_cols = [c for c in obj_cols if c not in (obj_x, obj_y)]
     osorted = objects.orderBy(*[F.col(c).asc() for c in order_cols])
@@ -306,6 +325,97 @@ def knn_join_obj_broadcast(
     return queries.mapInPandas(gen, schema=out_schema)
 
 
+def _certified_radius(
+    gx: np.ndarray, gy: np.ndarray, cnt: np.ndarray, level: int, need: int
+) -> tuple[int, int, int, np.ndarray]:
+    """Per cell ``h`` of the occupied bbox at ``level``: a radius ``B`` such
+    that the cells lying WHOLLY within ``B`` of every point of ``h`` hold
+    ≥ ``need`` objects, so every point of ``h`` has ≥ ``need`` objects
+    within ``B``. The cell at offset (dx, dy) qualifies once
+    hypot((|dx|+1)·cw, (|dy|+1)·ch) ≤ ``B``; offsets are swept in that
+    order, so ``B`` is the smallest such radius up to ``_SWEEP_CELLS``
+    cells. A cell needing more takes its parent cell's ``B`` (a coarse
+    radius bounds every point of the coarse cell), so the sweep stays
+    O(_SWEEP_CELLS²) array adds per level. A bbox wider than
+    ``_TABLE_CELLS`` is tabulated at the finest coarser level that fits
+    (counts roll up exactly). Requires ``cnt.sum() >= need`` (level 0 then
+    always certifies).
+
+    Returns ``(table_level, x0, y0, B)`` with ``B[gx - x0, gy - y0]`` in
+    ``table_level`` grid indices."""
+    x0, y0 = int(gx.min()), int(gy.min())
+    w, h = int(gx.max()) - x0 + 1, int(gy.max()) - y0 + 1
+    if w * h > _TABLE_CELLS:
+        return _certified_radius(gx >> 1, gy >> 1, cnt, level - 1, need)
+    grid = np.zeros((w, h))
+    np.add.at(grid, (gx - x0, gy - y0), cnt)
+    cw, ch = cells.cell_width(level), cells.cell_height(level)
+    reach = _SWEEP_CELLS * max(cw, ch)
+    na, nb = min(w, int(reach / cw)), min(h, int(reach / ch))
+    far = np.hypot((np.arange(na)[:, None] + 1) * cw,
+                   (np.arange(nb)[None, :] + 1) * ch)
+    pad = np.pad(grid, ((na, na), (nb, nb)))
+    total = np.zeros_like(grid)
+    radius = np.full(grid.shape, np.inf)
+    for o in np.argsort(far, axis=None, kind="stable"):
+        a, b = divmod(int(o), nb)
+        for dx in {a, -a}:
+            for dy in {b, -b}:
+                total += pad[na + dx:na + dx + w, nb + dy:nb + dy + h]
+        # offsets ascend in distance: the first certifying one is minimal
+        radius[(total >= need) & (radius == np.inf)] = far.flat[o]
+        if not np.isinf(radius).any():
+            return level, x0, y0, radius
+    _, px0, py0, up = _certified_radius(gx >> 1, gy >> 1, cnt, level - 1, need)
+    ix = ((np.arange(w) + x0) >> 1) - px0
+    iy = ((np.arange(h) + y0) >> 1) - py0
+    return level, x0, y0, np.minimum(radius, up[np.ix_(ix, iy)])
+
+
+def _first_rings(
+    queries: DataFrame,
+    ids: np.ndarray,
+    cnt: np.ndarray,
+    count_level: int,
+    level: int,
+    need: int,
+    qx: str,
+    qy: str,
+) -> DataFrame:
+    """Attach each query's count-certified first disk (``_ring`` cells in
+    x, ``_ring_y`` in y at ``level``) from the object count ``cnt`` of
+    each occupied cell ``ids`` at ``count_level`` (``cnt.sum() >= need``).
+
+    The radius table of ``_certified_radius`` is broadcast (a coarse
+    table's radius bounds every fine cell inside its cell). A query whose
+    table-level cell ``h`` lies outside the bbox uses its clamped cell
+    ``h'`` plus the farthest a point of ``h`` can be from ``h'``
+    (triangle inequality). The disk then holds every object within ``B``
+    of the query — ≥ ``need`` of them — and every object outside it is
+    farther than min(ring·cw, ring_y·ch) ≥ B, so the round-1 completeness
+    test passes."""
+    gx, gy = cells.np_cell_xy(ids)
+    t, x0, y0, radius = _certified_radius(gx, gy, cnt, count_level, need)
+    w, h = radius.shape
+    hx, hy = cells._grid_x(F.col(qx), t), cells._grid_y(F.col(qy), t)
+    kx = F.least(F.greatest(hx, F.lit(x0)), F.lit(x0 + w - 1))
+    ky = F.least(F.greatest(hy, F.lit(y0)), F.lit(y0 + h - 1))
+    table = F.broadcast(queries.sparkSession.createDataFrame(pd.DataFrame(
+        {"_tk": np.arange(w * h, dtype=np.int64), "_tb": radius.ravel()})))
+    b = table["_tb"] + F.hypot(
+        (hx - kx) * F.lit(cells.cell_width(t)),
+        (hy - ky) * F.lit(cells.cell_height(t)),
+    )
+    n_side = 1 << level
+    return queries.join(table, (kx - x0) * h + (ky - y0) == table["_tk"]).select(
+        *[queries[c] for c in queries.columns],
+        F.least(F.lit(n_side), F.ceil(b / F.lit(cells.cell_width(level))))
+        .cast("int").alias("_ring"),
+        F.least(F.lit(n_side), F.ceil(b / F.lit(cells.cell_height(level))))
+        .cast("int").alias("_ring_y"),
+    )
+
+
 def knn_join(
     queries: DataFrame,
     objects: DataFrame,
@@ -317,7 +427,6 @@ def knn_join(
     obj_x: str = "ox",
     obj_y: str = "oy",
     include_ties: bool = False,
-    initial_ring: int = 1,
     max_rounds: int = 32,
     exclude_pair: tuple[str, str] | None = None,
     metric: str = "euclid",
@@ -346,23 +455,6 @@ def knn_join(
     bound — conservative, never wrong."""
     obj_order = [c for c in objects.columns if c not in (obj_x, obj_y)]
     qcols = queries.columns
-    # Geodesic metrics probe much wider disks (the longitude ring scales
-    # by 1/cos φ), so their map-side probes are CPU-heavy enough that the
-    # object cache must be spread across the configured parallelism
-    # rather than pinned to the source's input-split count. For euclid
-    # the probes are cheap and the extra shuffle measurably loses —
-    # cache the scan partitions as-is.
-    objects_c = objects.withColumn(
-        "cell", cells.cell_id(F.col(obj_x), F.col(obj_y), level)
-    )
-    if metric in ("sphere", "spheroid"):
-        npart = int(
-            objects.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        objects_c = objects_c.repartition(npart)
-    objects_c = objects_c.persist()
-    n_obj = objects_c.count()  # materialize once; reused every round
-
-    min_dim = cells.min_cell_dim(level)
     ch, cw = cells.cell_height(level), cells.cell_width(level)
     n_side = 1 << level
     geodesic = metric in ("sphere", "spheroid")
@@ -374,42 +466,8 @@ def knn_join(
     # (≈1.7% looser rings than the sphere path; correctness over economy)
     r_bound = _EARTH_RADIUS_M if metric != "spheroid" else _WGS84_A * (1.0 - 5.0 * _WGS84_F)
     dcol = "dist_m" if geodesic else "dist_sq"
-    results: list[DataFrame] = []
-    # density-sized first ring: aim for ~4k expected candidates so ≥90% of
-    # queries resolve in round 1 (each extra round costs one checkpoint job
-    # + a count job). Uses the count we already ran — no extra job, no
-    # correctness impact (the completeness bound is unchanged).
-    exp_per_cell = max(n_obj / float(n_side * n_side), 1e-9)
-    ring0 = int(math.ceil((math.sqrt(4.0 * k / exp_per_cell) - 1.0) / 2.0))
-    ring0 = max(max(1, int(initial_ring)), min(ring0, n_side))
-    if geodesic:
-        # high-latitude queries need a wider LONGITUDE disk before the
-        # x-bound (∝ cos φ) can certify the kth distance: scale the initial
-        # ring by 1/cos(lat) so polar queries also resolve in round 1
-        # instead of doubling through extra rounds
-        scaled = F.least(
-            F.lit(n_side),
-            F.ceil(
-                F.lit(float(ring0))
-                / F.greatest(F.cos(F.radians(F.col(qy))), F.lit(2.0 / n_side))
-            ),
-        )
-        # if the scaled disk's lat band touches the pole, cos(φ_max) = 0
-        # kills the x-bound and round 1 can NEVER certify — jump the
-        # LONGITUDE ring straight to the half-ring (full wrapped lon
-        # coverage), where only the y-bound applies. The LATITUDE ring
-        # (_ring_y) stays at the density-scaled size: the asymmetric disk
-        # keeps polar candidate volume proportional to the lat band the
-        # y-bound actually needs, instead of a square (n/2)² blow-up
-        polar = F.abs(F.col(qy)) + (scaled + 1) * F.lit(ch) >= F.lit(90.0)
-        ring_expr = F.when(
-            polar, F.greatest(scaled, F.lit(float(n_side // 2)))
-        ).otherwise(scaled).cast("int")
-        unresolved = queries.withColumn("_ring", ring_expr).withColumn(
-            "_ring_y", scaled.cast("int")
-        )
-    else:
-        unresolved = queries.withColumn("_ring", F.lit(ring0))
+    # a self-excluding join must certify one extra object per query
+    need = k + (exclude_pair is not None)
     rank_fn = F.rank() if include_ties else F.row_number()
 
     if include_ties:
@@ -426,16 +484,15 @@ def knn_join(
     # per-query completeness bound, evaluated PER ROW on the ranked
     # candidates (no separate stats aggregation / join — one window pass):
     # kth distance ≤ bound(ring) guarantees no closer object outside the
-    # disk; a disk covering the whole grid is complete by definition
+    # disk; a disk covering the whole grid is complete by definition.
+    # Each axis has its own ring: an object outside the disk is
+    # ≥ _ring cells away in x or ≥ _ring_y cells away in y
     rr = F.col("_ring").cast("double")
+    ry = F.col("_ring_y").cast("double")
     if geodesic:
         # the x-disk WRAPS (cyclic longitude): excluded-by-x objects have
         # cyclic lon separation ≥ ring·cell_w; once ring ≥ n/2 the full lon
-        # ring is covered and only the latitude bound applies. An object
-        # outside the ASYMMETRIC disk is either ≥ _ring_y cells away in
-        # latitude (≥ y_bound) or ≥ _ring cells in cyclic longitude
-        # (≥ x_bound) — each axis uses its own ring
-        ry = F.col("_ring_y").cast("double")
+        # ring is covered and only the latitude bound applies
         r_earth = F.lit(r_bound)
         y_bound = r_earth * (ry * F.lit(ch * _RAD))
         phi_max = F.least(F.lit(90.0), F.abs(F.col(qy)) + (ry + 1) * F.lit(ch))
@@ -445,131 +502,195 @@ def knn_join(
         bound = F.when(rr >= n_side // 2, y_bound).otherwise(
             F.least(y_bound, x_bound)
         )
+        # wrapped longitude covers at the half-ring
+        x_full = n_side // 2
     else:
-        bound = (rr * F.lit(min_dim)) * (rr * F.lit(min_dim))
-    if geodesic:
-        # full coverage of the asymmetric disk: wrapped longitude covers
-        # at the half-ring, latitude needs the full ring
-        full_cover = (F.col("_ring") >= n_side // 2) & (
-            F.col("_ring_y") >= n_side
+        # a ring spanning the grid leaves nothing outside on its axis
+        far = F.lit(float("inf"))
+        reach = F.least(
+            F.when(rr >= n_side, far).otherwise(rr * F.lit(cw)),
+            F.when(ry >= n_side, far).otherwise(ry * F.lit(ch)),
         )
-    else:
-        full_cover = F.col("_ring") >= n_side
+        bound = reach * reach
+        x_full = n_side
+    full_cover = (F.col("_ring") >= x_full) & (F.col("_ring_y") >= n_side)
+
+    def widen(ring: str):
+        # blind growth, capped at the grid (a wider ring covers nothing more)
+        return F.least(F.lit(n_side), F.col(ring) * 4)
+
     done_expr = (
         (F.col("_cnt") >= k) & (F.col("_kth") <= bound)
     ) | full_cover
 
-    for _ in range(max_rounds):
-        disk = _disk_join(unresolved, objects_c, level, qx, qy, obj_x, obj_y, metric)
-        if exclude_pair is not None:
-            disk = disk.filter(F.col(exclude_pair[0]) != F.col(exclude_pair[1]))
-        # rank window + count/max windows share the same partitioning →
-        # one shuffle; the lazy localCheckpoint materializes inside the
-        # count job below — ONE pass over the data per round (round 1 of
-        # the old shape ran 3 jobs: results checkpoint, nxt checkpoint,
-        # count)
-        cand = (
-            disk
-            .withColumn("knn_rank", rank_fn.over(w))
-            .filter(F.col("knn_rank") <= k)
-            .withColumn("_cnt", F.count(F.lit(1)).over(wq))
-            .withColumn("_kth", F.max(dcol).over(wq))
-            .withColumn("_done", done_expr)
-            .localCheckpoint(eager=False)
+    # Geodesic metrics probe much wider disks (the longitude ring scales
+    # by 1/cos φ), so their map-side probes are CPU-heavy enough that the
+    # object cache must be spread across the configured parallelism
+    # rather than pinned to the source's input-split count. For euclid
+    # the probes are cheap and the extra shuffle measurably loses —
+    # cache the scan partitions as-is.
+    objects_c = objects.withColumn(
+        "cell", cells.cell_id(F.col(obj_x), F.col(obj_y), level)
+    )
+    if geodesic:
+        npart = int(
+            objects.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        objects_c = objects_c.repartition(npart)
+    objects_c = objects_c.persist()
+    try:
+        # materializes the object cache (reused every round) and sizes the
+        # first ring: one row per occupied count cell reaches the driver
+        fine = min(level + _COUNT_LEVELS, cells.MAX_LEVEL)
+        counts = (
+            objects_c.select(
+                cells.cell_id(F.col(obj_x), F.col(obj_y), fine).alias("c"))
+            .dropna().groupBy("c").count().toPandas()
         )
-        results.append(
-            cand.filter(F.col("_done")).drop("_cnt", "_kth", "_done")
-        )
-
-        # adaptive growth: with ≥k candidates the kth distance is an upper
-        # bound on the true kth ⇒ size the ring so bound(ring) ≥ kth; with
-        # <k candidates grow 4× blind
-        extra_aggs = (
-            [F.first("_ring_y").alias("_ry")] if geodesic else []
-        )
-        notdone = cand.filter(~F.col("_done")).groupBy(query_id).agg(
-            *[F.first(c).alias(c) for c in qcols if c != query_id],
-            F.first("_cnt").alias("_cnt"),
-            F.first("_kth").alias("_kth"),
-            F.first("_ring").alias("_r"),
-            *extra_aggs,
-        )
+        ids = counts["c"].to_numpy(np.int64)
+        cnt = counts["count"].to_numpy(np.float64)
+        n_obj = cnt.sum()
+        results: list[DataFrame] = []
         if geodesic:
-            kth = F.col("_kth")
-            ring_y = kth / F.lit(r_bound * ch * _RAD)
-            phi_max_g = F.least(
-                F.lit(90.0), F.abs(F.col(qy)) + (F.col("_r") + 1) * F.lit(ch)
+            # density-sized first ring: a disk expected to hold ≥ 4·k
+            # objects at the global mean density
+            exp_per_cell = max(n_obj / float(n_side * n_side), 1e-9)
+            ring0 = int(math.ceil((math.sqrt(4.0 * k / exp_per_cell) - 1.0) / 2.0))
+            ring0 = max(1, min(ring0, n_side))
+            # high-latitude queries need a wider LONGITUDE disk before the
+            # x-bound (∝ cos φ) can certify the kth distance: scale the initial
+            # ring by 1/cos(lat) so polar queries also resolve in round 1
+            # instead of doubling through extra rounds
+            scaled = F.least(
+                F.lit(n_side),
+                F.ceil(
+                    F.lit(float(ring0))
+                    / F.greatest(F.cos(F.radians(F.col(qy))), F.lit(2.0 / n_side))
+                ),
             )
-            cmin_g = F.greatest(F.cos(phi_max_g * F.lit(_RAD)), F.lit(1e-12))
-            ang_needed = (
-                F.lit(2.0 / _RAD)
-                * F.asin(F.least(F.lit(1.0), kth / (F.lit(2.0) * F.lit(r_bound) * cmin_g)))
+            # if the scaled disk's lat band touches the pole, cos(φ_max) = 0
+            # kills the x-bound and round 1 can NEVER certify — jump the
+            # LONGITUDE ring straight to the half-ring (full wrapped lon
+            # coverage), where only the y-bound applies. The LATITUDE ring
+            # (_ring_y) stays at the density-scaled size: the asymmetric disk
+            # keeps polar candidate volume proportional to the lat band the
+            # y-bound actually needs, instead of a square (n/2)² blow-up
+            polar = F.abs(F.col(qy)) + (scaled + 1) * F.lit(ch) >= F.lit(90.0)
+            ring_expr = F.when(
+                polar, F.greatest(scaled, F.lit(float(n_side // 2)))
+            ).otherwise(scaled).cast("int")
+            unresolved = queries.withColumn("_ring", ring_expr).withColumn(
+                "_ring_y", scaled.cast("int")
             )
-            ring_x = ang_needed / F.lit(cw)
-            # each axis grows by its OWN requirement: certification needs
-            # min(y_bound(_ring_y), x_bound(_ring)) >= kth, i.e. both
-            grown = F.least(
-                F.lit(float(n_side)),
-                F.greatest(F.ceil(ring_x) + 1,
-                           F.col("_r").cast("double") * 2),
-            )
-            grown_y = F.least(
-                F.lit(float(n_side)),
-                F.greatest(F.ceil(ring_y) + 1,
-                           F.col("_ry").cast("double") * 2),
-            )
-            # near-pole: the x-bound is capped at 2R·cos(φ_max); if even
-            # that ceiling cannot certify kth, jump straight to the
-            # half-ring (full wrapped longitude coverage — beyond it only
-            # the latitude bound matters) instead of doubling through
-            # useless intermediate rounds
-            hopeless_x = F.lit(2.0) * F.lit(r_bound) * cmin_g < kth
-            grown = F.when(
-                hopeless_x, F.greatest(grown, F.lit(float(n_side // 2)))
-            ).otherwise(grown)
+        elif n_obj >= need:
+            unresolved = _first_rings(
+                queries, ids, cnt, fine, level, need, qx, qy)
         else:
-            grown = F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)) + 1
-        remaining = notdone.withColumn(
-            "_ring",
-            F.when(F.col("_cnt") >= k, grown)
-            .otherwise(F.col("_r") * 4)
-            .cast("int"),
-        )
-        if geodesic:
-            remaining = remaining.withColumn(
-                "_ring_y",
-                F.when(F.col("_cnt") >= k, grown_y)
-                .otherwise(F.col("_ry") * 4)
-                .cast("int"),
-            ).drop("_ry")
-        remaining = remaining.drop("_cnt", "_kth", "_r")
-        # queries with ZERO candidates produce no cand row: widen them too
-        # (unless their disk already covered the whole grid — then there is
-        # genuinely nothing to return and they are done)
-        not_covered = (
-            (F.col("_ring") < n_side // 2) | (F.col("_ring_y") < n_side)
-            if geodesic
-            else F.col("_ring") < n_side
-        )
-        missing = (
-            unresolved.join(cand, query_id, "left_anti")
-            .filter(not_covered)
-            .withColumn("_ring", (F.col("_ring") * 4).cast("int"))
-        )
-        if geodesic:
-            missing = missing.withColumn(
-                "_ring_y", (F.col("_ring_y") * 4).cast("int")
-            )
-        nxt = remaining.unionByName(missing).localCheckpoint(eager=False)
-        n_rem = nxt.count()  # materializes cand + nxt checkpoints (1 job)
-        unresolved = nxt
-        if n_rem == 0:
-            unresolved = None
-            break
+            # fewer objects than k: only the whole grid is complete
+            unresolved = queries.withColumn("_ring", F.lit(n_side)).withColumn(
+                "_ring_y", F.lit(n_side))
 
-    if unresolved is not None:
-        raise RuntimeError("knn_join failed to converge (max_rounds exceeded)")
-    objects_c.unpersist()
+        for _ in range(max_rounds):
+            disk = _disk_join(unresolved, objects_c, level, qx, qy, obj_x, obj_y, metric)
+            if exclude_pair is not None:
+                disk = disk.filter(F.col(exclude_pair[0]) != F.col(exclude_pair[1]))
+            # rank window + count/max windows share the same partitioning →
+            # one shuffle; the lazy localCheckpoint materializes inside the
+            # count job below — ONE pass over the data per round (round 1 of
+            # the old shape ran 3 jobs: results checkpoint, nxt checkpoint,
+            # count)
+            cand = (
+                disk
+                .withColumn("knn_rank", rank_fn.over(w))
+                .filter(F.col("knn_rank") <= k)
+                .withColumn("_cnt", F.count(F.lit(1)).over(wq))
+                .withColumn("_kth", F.max(dcol).over(wq))
+                .withColumn("_done", done_expr)
+                .localCheckpoint(eager=False)
+            )
+            results.append(
+                cand.filter(F.col("_done")).drop("_cnt", "_kth", "_done")
+            )
+
+            # adaptive growth: with ≥k candidates the kth distance is an upper
+            # bound on the true kth ⇒ size each axis's ring so its bound ≥ kth;
+            # with <k candidates grow 4× blind
+            notdone = cand.filter(~F.col("_done")).groupBy(query_id).agg(
+                *[F.first(c).alias(c) for c in qcols if c != query_id],
+                F.first("_cnt").alias("_cnt"),
+                F.first("_kth").alias("_kth"),
+                F.first("_ring").alias("_r"),
+                F.first("_ring_y").alias("_ry"),
+            )
+            if geodesic:
+                kth = F.col("_kth")
+                ring_y = kth / F.lit(r_bound * ch * _RAD)
+                phi_max_g = F.least(
+                    F.lit(90.0), F.abs(F.col(qy)) + (F.col("_r") + 1) * F.lit(ch)
+                )
+                cmin_g = F.greatest(F.cos(phi_max_g * F.lit(_RAD)), F.lit(1e-12))
+                ang_needed = (
+                    F.lit(2.0 / _RAD)
+                    * F.asin(F.least(F.lit(1.0), kth / (F.lit(2.0) * F.lit(r_bound) * cmin_g)))
+                )
+                ring_x = ang_needed / F.lit(cw)
+                # each axis grows by its OWN requirement: certification needs
+                # min(y_bound(_ring_y), x_bound(_ring)) >= kth, i.e. both
+                grown = F.least(
+                    F.lit(float(n_side)),
+                    F.greatest(F.ceil(ring_x) + 1,
+                               F.col("_r").cast("double") * 2),
+                )
+                grown_y = F.least(
+                    F.lit(float(n_side)),
+                    F.greatest(F.ceil(ring_y) + 1,
+                               F.col("_ry").cast("double") * 2),
+                )
+                # near-pole: the x-bound is capped at 2R·cos(φ_max); if even
+                # that ceiling cannot certify kth, jump straight to the
+                # half-ring (full wrapped longitude coverage — beyond it only
+                # the latitude bound matters) instead of doubling through
+                # useless intermediate rounds
+                hopeless_x = F.lit(2.0) * F.lit(r_bound) * cmin_g < kth
+                grown = F.when(
+                    hopeless_x, F.greatest(grown, F.lit(float(n_side // 2)))
+                ).otherwise(grown)
+            else:
+                kth = F.sqrt(F.col("_kth"))
+                grown = F.least(F.lit(float(n_side)), F.ceil(kth / F.lit(cw)) + 1)
+                grown_y = F.least(F.lit(float(n_side)), F.ceil(kth / F.lit(ch)) + 1)
+            remaining = (
+                notdone.withColumn(
+                    "_ring",
+                    F.when(F.col("_cnt") >= k, grown)
+                    .otherwise(widen("_r"))
+                    .cast("int"),
+                )
+                .withColumn(
+                    "_ring_y",
+                    F.when(F.col("_cnt") >= k, grown_y)
+                    .otherwise(widen("_ry"))
+                    .cast("int"),
+                )
+                .drop("_cnt", "_kth", "_r", "_ry")
+            )
+            # queries with ZERO candidates produce no cand row: widen them too
+            # (unless their disk already covered the whole grid — then there is
+            # genuinely nothing to return and they are done)
+            missing = (
+                unresolved.join(cand, query_id, "left_anti")
+                .filter(~full_cover)
+                .withColumn("_ring", widen("_ring"))
+                .withColumn("_ring_y", widen("_ring_y"))
+            )
+            nxt = remaining.unionByName(missing).localCheckpoint(eager=False)
+            n_rem = nxt.count()  # materializes cand + nxt checkpoints (1 job)
+            unresolved = nxt
+            if n_rem == 0:
+                break
+        else:
+            raise RuntimeError("knn_join failed to converge (max_rounds exceeded)")
+    finally:
+        objects_c.unpersist()
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
@@ -610,7 +731,8 @@ def knn_join_approx(
     objects_c = objects.withColumn(
         "cell", cells.cell_id(F.col(obj_x), F.col(obj_y), level)
     )
-    qs = queries.withColumn("_ring", F.lit(int(ring)))
+    qs = queries.withColumn("_ring", F.lit(int(ring))).withColumn(
+        "_ring_y", F.lit(int(ring)))
     disk = _disk_join(qs, objects_c, level, qx, qy, obj_x, obj_y)
     w = Window.partitionBy(query_id).orderBy(
         F.col("dist_sq").asc(), *[F.col(c).asc() for c in obj_order]
@@ -618,5 +740,5 @@ def knn_join_approx(
     return (
         disk.withColumn("knn_rank", F.row_number().over(w))
         .filter(F.col("knn_rank") <= k)
-        .drop("_ring")
+        .drop("_ring", "_ring_y")
     )
